@@ -240,10 +240,13 @@ class Executor:
         logger=None,
         slack_post_fn=None,
         stopper=None,
+        views=None,
     ):
         from analyst_spark.logging import ERROR, ConsoleLogger
 
         self.spark = spark
+        # lake views FROM GLOBAL bodies may read (see GlobalStore)
+        self.views = views
         self.test_mode = test_mode
         # quiet by default, like the reference's NewConsoleLogger(Error)
         self.logger = logger or ConsoleLogger(min_level=ERROR)
@@ -372,7 +375,7 @@ class Executor:
     # -- block execution ---------------------------------------------
 
     def run(self, blocks: list[Block], options: dict | None = None) -> JobResult:
-        res = JobResult(globals=GlobalStore(self.spark))
+        res = JobResult(globals=GlobalStore(self.spark, self.views))
         # script SET globals override same-named CLI options
         # (compiler.go:239-268 mergeOptions)
         opts = dict(options or {})
@@ -739,6 +742,7 @@ def execute_script(
     logger=None,
     slack_post_fn=None,
     stopper=None,
+    views=None,
 ) -> JobResult:
     merged = dict(options or {})
     # First parse only harvests SET blocks — no template rendering yet,
@@ -754,7 +758,7 @@ def execute_script(
         spark, test_mode=False, connections=connections, plugins=plugins,
         lookup_order_cols=lookup_order_cols, tx_manager=tx_manager,
         connection_options=connection_options, logger=logger,
-        slack_post_fn=slack_post_fn, stopper=stopper,
+        slack_post_fn=slack_post_fn, stopper=stopper, views=views,
     )
     return ex.run(blocks, merged)
 

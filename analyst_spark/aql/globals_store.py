@@ -45,8 +45,12 @@ VIEW_LOCK = threading.Lock()
 
 
 class GlobalStore:
-    def __init__(self, spark: SparkSession):
+    def __init__(self, spark: SparkSession, views: dict[str, DataFrame] | None = None):
         self.spark = spark
+        # lower-case name -> session view the job reads by name (the
+        # lake tables): re-asserted with the job's own tables, which
+        # shadow them
+        self.views = views or {}
         self.tables: dict[str, DataFrame] = {}
 
     def register(self, name: str, df: DataFrame, append: bool = True) -> None:
@@ -64,7 +68,7 @@ class GlobalStore:
         before a spark.sql over globals — a concurrent job may have
         pointed a same-named view at its own table since we last
         registered)."""
-        for key, df in self.tables.items():
+        for key, df in {**self.views, **self.tables}.items():
             df.createOrReplaceTempView(key)
 
     def get(self, name: str) -> DataFrame:

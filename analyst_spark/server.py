@@ -125,6 +125,15 @@ class AnalystServer:
     task_runner: Callable[[Task, str], str] | None = None
 
     def __post_init__(self):
+        # Lock contract: ``_lock`` guards server state only — the
+        # scheduler (its tasks and invocations), the ``db`` handle and
+        # detached-job id allocation (``_next_job_id``, ``_jobs``).
+        # Script execution never holds it: synchronous and detached
+        # /run jobs and /compile run concurrently on the shared
+        # SparkSession, each with its own Executor and GlobalStore;
+        # their isolation rests on globals_store.VIEW_LOCK, which
+        # serializes every temp-view register → spark.sql window.
+        # (A scheduler tick still runs its due tasks under ``_lock``.)
         self._lock = threading.RLock()
         self.db = sqlite3.connect(self.db_path, check_same_thread=False)
         self.db.executescript(_SCHEMA)
@@ -132,8 +141,8 @@ class AnalystServer:
         self.scheduler = Scheduler(runner=runner, clock=self.clock)
         self._n_persisted_invocations = 0
         # cancellation registries (engine/stopper.go analog): detached
-        # /run jobs and in-flight scheduled tasks, stoppable while the
-        # main lock is held by the running job
+        # /run jobs and in-flight scheduled tasks, stoppable without
+        # the main lock (a scheduler tick holds it while tasks run)
         self._jobs: dict[int, dict] = {}
         self._next_job_id = 1
         self._task_stoppers: dict[int, object] = {}
@@ -258,25 +267,30 @@ class AnalystServer:
         """Dispatch one request; returns (status, json-serializable).
         Routes mirror main.go:160-175."""
         body = body or {}
+        method, path = method.upper(), path.rstrip("/")
         try:
-            # stop/status routes bypass the main lock: a running job or
-            # scheduled task HOLDS that lock (detached worker threads
-            # take it only to finalize), and cancellation must be able
-            # to land while it runs
-            m = re.fullmatch(r"/(?:jobs|tasks)/(\d+)/stop", path.rstrip("/"))
-            if method.upper() == "POST" and m:
-                if path.rstrip("/").startswith("/jobs/"):
-                    return self._stop_job(int(m.group(1)))
-                return self._stop_task(int(m.group(1)))
-            m = re.fullmatch(r"/jobs/(\d+)", path.rstrip("/"))
-            if method.upper() == "GET" and m:
+            # script and job routes bypass the main lock (see the lock
+            # contract in __post_init__): /run and /compile execute
+            # concurrently, and a stop must land while a scheduler
+            # tick holds the lock
+            if (method, path) == ("POST", "/run"):
+                return self._run_script(body)
+            if (method, path) == ("POST", "/compile"):
+                return self._compile_script(body)
+            m = re.fullmatch(r"/(jobs|tasks)/(\d+)/stop", path)
+            if method == "POST" and m:
+                if m.group(1) == "jobs":
+                    return self._stop_job(int(m.group(2)))
+                return self._stop_task(int(m.group(2)))
+            m = re.fullmatch(r"/jobs/(\d+)", path)
+            if method == "GET" and m:
                 return self._job_status(int(m.group(1)))
-            m = re.fullmatch(r"/jobs/(\d+)/logs", path.rstrip("/"))
-            if method.upper() == "GET" and m:
+            m = re.fullmatch(r"/jobs/(\d+)/logs", path)
+            if method == "GET" and m:
                 return self._job_logs(int(m.group(1)),
                                       int(body.get("after", 0)))
             with self._lock:
-                return self._route(method.upper(), path.rstrip("/"), body)
+                return self._route(method, path, body)
         except HTTPError as e:
             return e.status, {"error": str(e)}
         except (ValueError, KeyError) as e:
@@ -295,10 +309,6 @@ class AnalystServer:
                 for n, i in enumerate(self.scheduler.invocations)
             ]
             return 200, out[-limit:][::-1]  # newest first (db.go:24-28)
-        if (method, path) == ("POST", "/run"):
-            return self._run_script(body)
-        if (method, path) == ("POST", "/compile"):
-            return self._compile_script(body)
 
         m = re.fullmatch(r"/tasks/(\d+)(/[a-z-]+)?", path)
         if not m:
@@ -391,14 +401,14 @@ class AnalystServer:
         from analyst_spark.logging import CollectingLogger
         from analyst_spark.stopper import JobInterrupted, Stopper
 
-        jid = self._next_job_id
-        self._next_job_id += 1
-        job = {
-            "id": jid, "status": "running", "output": None,
-            "error": None, "stopper": Stopper(),
-            "logger": CollectingLogger(), "done": threading.Event(),
-        }
-        self._jobs[jid] = job
+        with self._lock:
+            jid = self._next_job_id
+            self._next_job_id += 1
+            job = self._jobs[jid] = {
+                "id": jid, "status": "running", "output": None,
+                "error": None, "stopper": Stopper(),
+                "logger": CollectingLogger(), "done": threading.Event(),
+            }
 
         def work():
             try:
@@ -664,16 +674,24 @@ def serve(server: AnalystServer, port: int = 4040, tick_interval: float = SCHEDU
 
 def spark_script_runner(spark, sf_dir: str | None = None):
     """Production script_runner: execute through the AQL engine on a
-    live session; registers the lake tables first when sf_dir given."""
+    live session. With sf_dir, each run re-registers the lake tables
+    and hands them to the job as its base GLOBAL views, so a
+    concurrent job's same-named GLOBAL table cannot shadow them."""
     from analyst_spark.aql.engine import execute_script
-    from analyst_spark.tables import register_views
+    from analyst_spark.aql.globals_store import VIEW_LOCK
+    from analyst_spark.tables import TABLE_NAMES, load_tables
 
     def run(script: str, params: dict, stopper=None, logger=None) -> list[str]:
+        views = None
         if sf_dir:
-            register_views(spark, sf_dir)
+            tables = load_tables(spark, sf_dir)
+            views = {name: tables[name] for name in TABLE_NAMES}
+            with VIEW_LOCK:  # footers were read above, outside the lock
+                for name, df in views.items():
+                    df.createOrReplaceTempView(name)
         return execute_script(
             spark, script, options=params or None, stopper=stopper,
-            logger=logger,
+            logger=logger, views=views,
         ).console
 
     return run

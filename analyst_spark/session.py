@@ -22,6 +22,16 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _local_driver_memory() -> str:
+    """Heap for a local-master driver: 32g, capped at half the host's
+    physical RAM so the JVM never grows past what the machine has."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "32g"
+    return f"{min(32 * 1024, phys // 2 // (1 << 20))}m"
+
+
 def get_spark(app_name: str = "analyst_spark", cpus: str | None = None) -> SparkSession:
     """Build (or fetch) the singleton SparkSession.
 
@@ -57,7 +67,9 @@ def get_spark(app_name: str = "analyst_spark", cpus: str | None = None) -> Spark
         .config("spark.sql.caseSensitive", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
-        builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", "32g")
+        builder = builder.master(f"local[{cpus}]").config(
+            "spark.driver.memory", _local_driver_memory()
+        )
         # Shuffle/spill files on tmpfs: the test host's disk has high
         # iowait variance; on a real cluster local dirs are NVMe and
         # this override is skipped. CAUTION: this host wipes

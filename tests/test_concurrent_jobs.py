@@ -57,3 +57,60 @@ def test_concurrent_jobs_same_alias_stay_isolated(spark):
         t.join(timeout=300)
     assert not errors, errors[0]
     assert results == {7: (21, 3), 11: (33, 3), 13: (39, 3), 17: (51, 3)}
+
+
+_SHADOW_NATION = """
+DATA 'Mine' (
+    [[901, "OWN_A"], [902, "OWN_B"]]
+) WITH (FORMAT = 'JSON_ARRAY', COLUMNS = 'n_nationkey,n_name')
+
+QUERY 'Stage' FROM BLOCK Mine (
+    SELECT n_nationkey, n_name FROM mine
+) INTO GLOBAL WITH (TABLE = 'nation')
+
+QUERY 'Read' FROM GLOBAL (
+    SELECT count(*) AS n, min(n_nationkey) AS lo FROM nation
+) INTO CONSOLE WITH (OUTPUT_FORMAT = 'JSON')
+AFTER Stage
+"""
+
+_READ_LAKE_NATION = """
+QUERY 'Read' FROM GLOBAL (
+    SELECT count(*) AS n, min(n_nationkey) AS lo FROM nation
+) INTO CONSOLE WITH (OUTPUT_FORMAT = 'JSON')
+"""
+
+
+def test_lake_view_and_same_named_global_stay_isolated(spark):
+    """The production runner re-registers the lake views on every run
+    while another job's INTO GLOBAL re-points the same view name: a
+    job staging its own `nation` must read it, and a job reading the
+    lake's `nation` must never see the other job's table."""
+    from analyst_spark.server import spark_script_runner
+    from tests.conftest import SF_DIR
+
+    run = spark_script_runner(spark, SF_DIR)
+    expected = {
+        _SHADOW_NATION: ['[{"n":2,"lo":901}]'],
+        _READ_LAKE_NATION: ['[{"n":25,"lo":0}]'],
+    }
+    barrier = threading.Barrier(2)
+    errors: list[Exception] = []
+
+    def loop(script: str):
+        try:
+            for _ in range(6):
+                barrier.wait(timeout=60)
+                got = run(script, {})
+                assert got == expected[script], (script, got)
+        except Exception as e:  # pragma: no cover - failure path
+            errors.append(e)
+            barrier.abort()
+
+    threads = [threading.Thread(target=loop, args=(s,)) for s in expected]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert not errors, errors[0]

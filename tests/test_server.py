@@ -7,7 +7,9 @@ time is driven by a fake clock so ticks are deterministic.
 
 from __future__ import annotations
 
+import contextlib
 import json
+import sys
 import threading
 import time
 import urllib.request
@@ -166,39 +168,204 @@ def test_unknown_routes_404(srv):
     assert s.handle("GET", "/tasks/1/last-invocation")[0] == 404
 
 
-def test_live_http_server_end_to_end(srv):
-    s, clock = srv
-    httpd = serve(s, port=0, tick_interval=3600)  # port 0 = ephemeral
-    port = httpd.server_address[1]
-    import threading
+def _call(port: int, method: str, path: str, body=None, timeout: float = 60):
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{port}{path}",
+        method=method,
+        data=json.dumps(body).encode() if body is not None else None,
+        headers={"Content-Type": "application/json"},
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=timeout) as r:
+            return r.status, json.loads(r.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
 
+
+@contextlib.contextmanager
+def _serving(server: AnalystServer):
+    """serve() on an ephemeral port in a background thread; yields the
+    port and shuts the server and its ticker down afterwards."""
+    httpd = serve(server, port=0, tick_interval=3600)
     t = threading.Thread(target=httpd.serve_forever, daemon=True)
     t.start()
     try:
-        def call(method, path, body=None):
-            req = urllib.request.Request(
-                f"http://127.0.0.1:{port}{path}",
-                method=method,
-                data=json.dumps(body).encode() if body is not None else None,
-                headers={"Content-Type": "application/json"},
-            )
-            try:
-                with urllib.request.urlopen(req) as r:
-                    return r.status, json.loads(r.read())
-            except urllib.error.HTTPError as e:
-                return e.code, json.loads(e.read())
-
-        status, task = call("POST", "/tasks", {"name": "t", "schedule": "@every 1h"})
-        assert status == 201 and task["id"] == 1
-        status, tasks = call("GET", "/tasks")
-        assert status == 200 and len(tasks) == 1
-        status, out = call("POST", "/run", {"script": "anything"})
-        assert status == 200 and out["success"]
-        status, out = call("GET", "/bogus")
-        assert status == 404
+        yield httpd.server_address[1]
     finally:
         httpd._analyst_stop.set()
         httpd.shutdown()
+        httpd.server_close()
+
+
+def _in_threads(fn, args: list) -> list:
+    """Run fn(arg) for every arg in its own thread; results in order."""
+    out = [None] * len(args)
+    errors: list[Exception] = []
+
+    def work(i, a):
+        try:
+            out[i] = fn(a)
+        except Exception as e:  # pragma: no cover - failure path
+            errors.append(e)
+
+    threads = [threading.Thread(target=work, args=(i, a)) for i, a in enumerate(args)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert not errors, errors[0]
+    return out
+
+
+def test_live_http_server_end_to_end(srv):
+    s, clock = srv
+    with _serving(s) as port:
+        status, task = _call(port, "POST", "/tasks", {"name": "t", "schedule": "@every 1h"})
+        assert status == 201 and task["id"] == 1
+        status, tasks = _call(port, "GET", "/tasks")
+        assert status == 200 and len(tasks) == 1
+        status, out = _call(port, "POST", "/run", {"script": "anything"})
+        assert status == 200 and out["success"]
+        status, out = _call(port, "GET", "/bogus")
+        assert status == 404
+
+
+def _barrier_runner(barrier: threading.Barrier):
+    def run(script: str, params: dict) -> list[str]:
+        barrier.wait()  # returns only once a second party arrives
+        return [script]
+
+    return run
+
+
+def test_concurrent_runs_do_not_wait_on_each_other():
+    """Each /run's runner waits for the other at a two-party barrier:
+    both succeed only if the server executes them at the same time."""
+    s = AnalystServer(script_runner=_barrier_runner(threading.Barrier(2, timeout=10)))
+    with _serving(s) as port:
+        replies = _in_threads(
+            lambda script: _call(port, "POST", "/run", {"script": script}),
+            ["job-a", "job-b"],
+        )
+    assert replies == [
+        (200, {"success": True, "output": ["job-a"]}),
+        (200, {"success": True, "output": ["job-b"]}),
+    ]
+
+
+def test_compile_answers_while_a_run_is_blocked():
+    barrier = threading.Barrier(2, timeout=30)
+    s = AnalystServer(script_runner=_barrier_runner(barrier))
+    with _serving(s) as port:
+        run_reply = []
+        t = threading.Thread(target=lambda: run_reply.append(
+            _call(port, "POST", "/run", {"script": "held"})
+        ))
+        t.start()
+        deadline = time.monotonic() + 10
+        while barrier.n_waiting < 1 and time.monotonic() < deadline:
+            time.sleep(0.01)
+        assert barrier.n_waiting == 1  # the /run is inside its runner
+        status, out = _call(port, "POST", "/compile",
+                            {"script": "QUERY 'a' FROM GLOBAL (SELECT 1 AS x) INTO CONSOLE"},
+                            timeout=5)
+        assert status == 200 and out == {"success": True, "blocks": 1}
+        assert not run_reply  # answered before the /run was released
+        barrier.wait()  # release it
+        t.join(timeout=10)
+        assert not t.is_alive()
+    assert run_reply == [(200, {"success": True, "output": ["held"]})]
+
+
+def test_concurrent_task_creation_gets_distinct_ids(tmp_path):
+    """_lock still guards task state: eight racing id-less creates
+    (more clients than cores, short switch interval) never collide."""
+    s = AnalystServer(script_runner=echo_runner, db_path=str(tmp_path / "a.db"))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with _serving(s) as port:
+            replies = _in_threads(
+                lambda i: _call(port, "POST", "/tasks",
+                                {"name": f"t{i}", "schedule": "@every 1h"}),
+                list(range(8)),
+            )
+            status, tasks = _call(port, "GET", "/tasks")
+    finally:
+        sys.setswitchinterval(interval)
+    assert {status for status, _ in replies} == {201}
+    assert sorted(t["id"] for _, t in replies) == list(range(1, 9))
+    assert status == 200 and sorted(t["name"] for t in tasks) == [f"t{i}" for i in range(8)]
+
+
+def _shared_name_script(tag: int) -> str:
+    # every request uses the same block alias and GLOBAL table name,
+    # and joins its own table with the lake's nation view
+    return f"""
+    DATA 'Vals' ( [[{tag}], [{tag}], [{tag}]] ) WITH (FORMAT = 'JSON_ARRAY', COLUMNS = 'n')
+
+    QUERY 'Agg' FROM BLOCK Vals (
+        SELECT sum(n) AS total FROM vals
+    ) INTO GLOBAL WITH (Table = 'Out')
+
+    QUERY 'Echo' FROM GLOBAL (
+        SELECT o.total, count(*) AS nations FROM out o CROSS JOIN nation GROUP BY o.total
+    ) INTO CONSOLE WITH (OUTPUT_FORMAT = 'JSON')
+    AFTER Agg
+    """
+
+
+def test_concurrent_spark_runs_through_serve(spark):
+    from analyst_spark.server import spark_script_runner
+    from tests.conftest import SF_DIR
+
+    s = AnalystServer(script_runner=spark_script_runner(spark, SF_DIR))
+
+    def client(tag: int) -> list:
+        outputs = []
+        for _ in range(3):
+            status, out = _call(port, "POST", "/run", {"script": _shared_name_script(tag)})
+            assert status == 200 and out["success"], out
+            outputs.append([json.loads(o) for o in out["output"]])
+        return outputs
+
+    with _serving(s) as port:
+        got = _in_threads(client, [7, 11, 13, 17])
+    for tag, outputs in zip([7, 11, 13, 17], got):
+        assert outputs == [[[{"total": 3 * tag, "nations": 25}]]] * 3, tag
+
+
+def test_run_aql_serve_smoke(tmp_path):
+    """`tools/run_aql.py serve` starts the production server: it
+    answers one /run on the lake and exits cleanly on SIGINT."""
+    import os
+    import signal
+    import subprocess
+
+    from tests.conftest import SF_DIR
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with subprocess.Popen(
+        [sys.executable, os.path.join(root, "tools", "run_aql.py"), "serve",
+         "--port", "0", "--sf-dir", SF_DIR, "--db", str(tmp_path / "a.db"),
+         "--cpus", "2"],
+        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
+    ) as proc:
+        try:
+            line = proc.stdout.readline()
+            assert line.startswith("serving on http://127.0.0.1:"), line
+            port = int(line.rsplit(":", 1)[1])
+            status, out = _call(port, "POST", "/run", {"script": """
+                QUERY 'N' FROM GLOBAL ( SELECT count(*) AS n FROM nation )
+                INTO CONSOLE WITH (OUTPUT_FORMAT = 'JSON')
+            """})
+            assert status == 200 and out == {"success": True, "output": ['[{"n":25}]']}
+            proc.send_signal(signal.SIGINT)
+            assert proc.wait(timeout=60) == 0
+        finally:
+            if proc.poll() is None:
+                proc.kill()
 
 
 def test_job_logs_incremental_poll():

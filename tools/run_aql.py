@@ -5,9 +5,13 @@ Usage:
   python tools/run_aql.py run      script.aql [--params '{"K":"v"}'] [--sf-dir DIR]
   python tools/run_aql.py test     script.aql [--params ...]
   python tools/run_aql.py validate script.aql
+  python tools/run_aql.py serve    [--port 4040] [--sf-dir DIR] [--db analyst.db]
 
 `--sf-dir` registers the driver parquet tables as temp views first, so
 scripts can `QUERY ... FROM GLOBAL (SELECT ... FROM lineitem ...)`.
+`serve` starts the HTTP API server (analyst_spark/server.py) with every
+`POST /run` executed on one SparkSession; it prints the address it
+listens on and runs until interrupted.
 Console-destination output goes to stdout (stderr in the reference —
 console_dest.go:14; stdout is friendlier to pipes).
 """
@@ -24,13 +28,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="run_aql")
-    ap.add_argument("mode", choices=["run", "test", "validate"])
-    ap.add_argument("script")
+    ap.add_argument("mode", choices=["run", "test", "validate", "serve"])
+    ap.add_argument("script", nargs="?")
     ap.add_argument("--params", default="{}", help="JSON object of options")
     ap.add_argument("--sf-dir", default=None, help="register parquet tables from DIR")
     ap.add_argument("--cpus", default=None)
+    ap.add_argument("--port", type=int, default=4040, help="serve: port (0 = any free)")
+    ap.add_argument("--db", default=":memory:", help="serve: SQLite file for tasks")
     args = ap.parse_args(argv)
 
+    if args.mode == "serve":
+        return serve(args)
+    if args.script is None:
+        ap.error(f"{args.mode} needs a script")
     with open(args.script) as f:
         text = f.read()
     script_dir = os.path.dirname(os.path.abspath(args.script))
@@ -57,6 +67,29 @@ def main(argv: list[str] | None = None) -> int:
         print(line)
     if args.mode == "test":
         print("TESTS PASSED")
+    return 0
+
+
+def serve(args) -> int:
+    from analyst_spark import server
+    from analyst_spark.session import get_spark
+
+    spark = get_spark("run_aql", cpus=args.cpus)
+    srv = server.AnalystServer(
+        script_runner=server.spark_script_runner(spark, args.sf_dir),
+        db_path=args.db,
+    )
+    httpd = server.serve(srv, port=args.port)
+    host, port = httpd.server_address[:2]
+    print(f"serving on http://{host}:{port}", flush=True)
+    try:
+        httpd.serve_forever()
+    except KeyboardInterrupt:
+        pass
+    finally:
+        httpd._analyst_stop.set()
+        httpd.server_close()
+        srv.db.close()
     return 0
 
 
